@@ -393,8 +393,7 @@ def submit(spark, run_dir: Path):
     return next(q for q in spark.streams.active if q.name == QUERY_NAME)
 
 
-def run(spark, plan: Plan, seconds: float, run_dir: Path, tracer, setup_origin,
-        deadline: float) -> dict:
+def run(spark, plan: Plan, run_dir: Path, tracer, setup_origin, deadline: float) -> dict:
     """One open-loop run; ``setup_origin`` is the epoch time set-up started
     from (``None``: report no set-up time)."""
     import statistics
@@ -435,20 +434,25 @@ def run(spark, plan: Plan, seconds: float, run_dir: Path, tracer, setup_origin,
     # ---- batches: input files from the checkpoint, timing from progress
     landed = {os.path.basename(l.path): l for l in gen.landings}
     batch_files = batch_inputs(progress, _source_log(ckpt))
-    timing, rows = {}, {}
+    timing = {}
     for p in progress:
-        rows[p["batchId"]] = p["numInputRows"]
         start = _epoch(p["timestamp"])
         timing[p["batchId"]] = (start, start + p["durationMs"].get("triggerExecution", 0) / 1e3,
                                 p["durationMs"].get("triggerExecution", 0) / 1e3)
     batches = sorted(b for b in batch_files if b in timing)
     phase_of = {b: {landed[f].phase for f in batch_files[b] if f in landed} for b in batches}
     steady = {b for b in batches if phase_of[b] == {"steady"}}
+    if not steady:
+        # a machine so slow that one micro-batch spanned the whole steady
+        # phase: take the batches that read any steady-phase file
+        steady = {b for b in batches if "steady" in phase_of[b]}
 
     # ---- steady phase: newest-event latency per result row
     files = [(mtime, created) for mtime, b, created in _changelog(sink) if b in steady]
     lat = row_latencies(files)
     trig = [timing[b][2] for b in sorted(steady)]
+    if not lat:
+        raise RuntimeError("no micro-batch read the steady phase's files")
 
     # ---- overload phase: busy time and throughput under backlog. A
     # burst's cost is the summed duration of the micro-batches that read
@@ -474,15 +478,15 @@ def run(spark, plan: Plan, seconds: float, run_dir: Path, tracer, setup_origin,
     if not drained:
         notes.append(f"pipeline did not drain: {total_events} events landed")
 
-    lat_p50 = statistics.median(lat) if lat else float("nan")
-    lat_tail, tail_label, n_lat = tail(lat) if lat else (float("nan"), "none", 0)
-    trig_tail = tail(trig) if trig else (float("nan"), "none", 0)
+    lat_p50 = statistics.median(lat)
+    lat_tail, tail_label, n_lat = tail(lat)
+    trig_tail = tail(trig)
     report = {
         "setup_s": (setup_s, "s"),
         "total_s": (busy_s, "s", f"busy on {len(drains)} bursts, {over_events} events, in "
                     f"{n_burst_batches} micro-batches; each drained "
                     f"{' / '.join(f'{d:.3f}' for d in drains)} s after it landed"),
-        "query_p50_s": (statistics.median(trig) if trig else float("nan"), "s", "steady micro-batch"),
+        "query_p50_s": (statistics.median(trig), "s", "steady micro-batch"),
         "query_tail_s": (trig_tail[0], "s", f"{trig_tail[1]} of n={trig_tail[2]} micro-batches"),
         "failed_frac": (failed_frac(attempted, 0, 0, failed), "ratio"),
         "peak_rss_mb": (None, "MB"),

@@ -381,7 +381,7 @@ def run_workload(workload: str, inputs: dict, seed: int, seconds: float, spark, 
     warm_up(spark, inputs["data_dir"])
     deadline = time.perf_counter() + RUN_DEADLINE_S - (time.time() - PROC_START)
     if workload == "stream_open_loop":
-        out = openloop.run(spark, inputs["plan"], seconds, run_dir, tracer, setup_origin, deadline)
+        out = openloop.run(spark, inputs["plan"], run_dir, tracer, setup_origin, deadline)
     else:
         # the first pass pays each query's first-use costs (plan code
         # generation, UDF shipping, worker imports) and is set-up; its
