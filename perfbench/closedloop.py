@@ -30,11 +30,18 @@ QUERIES = [
     "q_match_recognize_sql",
 ]
 
-#: nominal seconds of one timed pass at 4 cores, with room for a machine
-#: slowed by other load: a run of ``--seconds`` makes ``seconds // PASS_S``
-#: timed passes (at least one), a count fixed by the arguments, not by
-#: how fast the passes go
-PASS_S = 6.0
+#: untimed passes before the timed ones, counted as set-up: the first
+#: pays each query's first-use costs (plan code generation, UDF shipping,
+#: worker imports), three to five times a later pass. The second pass is
+#: still up to 40% slow on ``dedup_simhash`` and ``q_match_recognize_sql``
+#: but close on ``q1_pricing_summary``; a timed pass costs as much as a
+#: warm one and makes the per-query medians steadier, so it is timed.
+WARM_PASSES = 1
+
+#: nominal seconds of one timed pass at 4 cores: a run of ``--seconds``
+#: makes ``seconds // PASS_S`` timed passes (at least one), a count fixed
+#: by the arguments, not by how fast the passes go
+PASS_S = 5.0
 
 #: one query's limit; past it the query is cancelled and counts as a timeout
 OP_TIMEOUT_S = 90.0

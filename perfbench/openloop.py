@@ -34,6 +34,11 @@ ZIPF_S = 1.1
 #: events are at most this many seconds out of order in event time
 JITTER_S = 5.0
 EVENT_BASE = np.datetime64("2024-01-01T00:00:00", "us")
+#: the steady phase lands a file this often
+STEADY_FILE_S = 0.25
+#: overload bursts land this far apart, as files of at most BURST_FILE events
+BURST_EVERY_S = 3.0
+BURST_FILE = 250_000
 
 SCRIPT = """
 SET 'execution.runtime-mode' = 'streaming';
@@ -113,26 +118,28 @@ class Plan:
 
     due: np.ndarray          # per file: due time in seconds after t0
     sizes: np.ndarray        # per file: event count
-    phase: list[str]         # per file: "steady" or "overload"
+    phase: list[str]         # per file: "warmup", "warm", "steady" or "overload"
     offsets: np.ndarray      # per event: due time in seconds after t0
     dim: np.ndarray
     user_id: np.ndarray
     price: np.ndarray
     event_us: np.ndarray     # per event: event time, us after EVENT_BASE
+    steady_start: float = 0.0
     steady_end: float = 0.0
 
 
-def make_plan(seed: int, steady_s: float, steady_eps: float, bursts: int, burst: int,
-              warmup: int, steady_file_s: float = 0.25, burst_every_s: float = 3.0,
-              burst_file: int = 250_000) -> Plan:
+def make_plan(seed: int, warm_s: float, steady_s: float, steady_eps: float, bursts: int,
+              burst: int, warmup: int) -> Plan:
     """Files and events for both phases. File 0 holds ``warmup`` events
     due in the second before t0; it is landed during set-up, before the
-    pipeline starts. The steady phase lands a file every
-    ``steady_file_s``. Then come ``bursts`` overload bursts of ``burst``
-    events, ``burst_every_s`` apart, each due at one instant and landed
-    as files of at most ``burst_file`` events that appear together. Event
-    times follow the schedule one to one, minus up to ``JITTER_S`` of
-    out-of-order jitter."""
+    pipeline starts. From t0 a file lands every ``STEADY_FILE_S`` at
+    ``steady_eps``: for ``warm_s`` seconds of warm phase, which is still
+    set-up, then for ``steady_s`` seconds of steady phase. Then come
+    ``bursts`` overload bursts of ``burst`` events, ``BURST_EVERY_S``
+    apart, each due at one instant and landed as files of at most
+    ``BURST_FILE`` events that appear together.
+    Event times follow the schedule one to one, minus up to ``JITTER_S``
+    of out-of-order jitter."""
     rng = np.random.default_rng([seed, 7])
     due, sizes, phase = [], [], []
     offsets = []
@@ -144,15 +151,16 @@ def make_plan(seed: int, steady_s: float, steady_eps: float, bursts: int, burst:
         phase.append(name)
 
     add(-1.0, 0.0, warmup, "warmup")
-    n_steady = max(1, int(round(steady_s / steady_file_s)))
-    for i in range(n_steady):
-        add(i * steady_file_s, (i + 1) * steady_file_s,
-            max(1, int(round(steady_eps * steady_file_s))), "steady")
-    end = n_steady * steady_file_s
+    n_warm = int(round(warm_s / STEADY_FILE_S))
+    n_steady = max(1, int(round(steady_s / STEADY_FILE_S)))
+    for i in range(n_warm + n_steady):
+        add(i * STEADY_FILE_S, (i + 1) * STEADY_FILE_S,
+            max(1, int(round(steady_eps * STEADY_FILE_S))), "warm" if i < n_warm else "steady")
+    end = (n_warm + n_steady) * STEADY_FILE_S
     for b in range(bursts):
-        due_at, left = end + b * burst_every_s, burst
+        due_at, left = end + b * BURST_EVERY_S, burst
         while left > 0:
-            k = min(left, burst_file)
+            k = min(left, BURST_FILE)
             add(due_at, due_at, k, "overload")
             left -= k
     off = np.concatenate(offsets)
@@ -170,6 +178,7 @@ def make_plan(seed: int, steady_s: float, steady_eps: float, bursts: int, burst:
         price=rng.integers(200, 4001, n) / 4.0,
         # an hour after EVENT_BASE, so jitter never reaches before it
         event_us=(3_600.0 + off - jitter) * 1e6,
+        steady_start=n_warm * STEADY_FILE_S,
         steady_end=end,
     )
 
@@ -277,20 +286,33 @@ class Generator:
 #: input rates: the steady phase sits well under the 4-core capacity,
 #: the overload phase well above it
 STEADY_EPS = 20_000
+#: seconds of input at the steady rate before the steady phase, counted
+#: as set-up: the first micro-batches of a fresh JVM take up to twice as
+#: long as those after about six seconds of input
+WARM_S = 6.0
+#: the steady phase's share of ``--seconds``. A micro-batch takes about a
+#: second and writes one result row per dim, so the latency tail lies in
+#: the slowest few batches; at 7.5 s of steady phase a ten-seed set spread
+#: 0.25 on ``latency_tail_s``.
+STEADY_SHARE = 0.4
 BURSTS = 3
 BURST_EVENTS = 1_000_000
 WARMUP_EVENTS = 2_000
 QUERY_NAME = "perfbench-open-loop-tbl_order_stat"
+#: margin on the steady phase's bounds when rows are picked by creation time
+CREATED_GUARD_S = 0.01
 #: HLL++ relative standard deviation of approx_count_distinct's default
 HLL_RSD = 0.05
 
 
 def plan_for(seed: int, seconds: float, smoke: bool = False) -> Plan:
-    """The schedule for a run of ``seconds``: half of it steady, then the
-    fixed overload bursts (smoke runs: small ones)."""
+    """The schedule for a run of ``seconds``: the warm phase, then
+    ``STEADY_SHARE`` of ``seconds`` steady, then the fixed overload
+    bursts (smoke runs: small ones, and no warm phase)."""
     if smoke:
-        return make_plan(seed, 1.0, 2_000, 1, 10_000, warmup=200)
-    return make_plan(seed, 0.5 * seconds, STEADY_EPS, BURSTS, BURST_EVENTS, warmup=WARMUP_EVENTS)
+        return make_plan(seed, 0.0, 1.0, 2_000, 1, 10_000, warmup=200)
+    return make_plan(seed, WARM_S, STEADY_SHARE * seconds, STEADY_EPS, BURSTS, BURST_EVENTS,
+                     warmup=WARMUP_EVENTS)
 
 
 def _epoch(ts: str) -> float:
@@ -353,18 +375,17 @@ def burst_busy(progress, batch_files: dict[int, set], burst):
 
 
 def _changelog(sink_dir: Path):
-    """``(mtime, batch id, last_created seconds)`` per changelog file."""
+    """``(mtime, last_created seconds)`` per changelog file."""
     out = []
     for f in sorted(sink_dir.glob("*.parquet")):
-        t = pq.read_table(f, columns=["__batch", "last_created"])
+        t = pq.read_table(f, columns=["last_created"])
         if t.num_rows == 0:
             continue
         # Spark may write INT96 timestamps, which read back as nanoseconds
         created = t.column("last_created").cast(
             pa.timestamp("us", tz="UTC"), safe=False
         ).cast(pa.int64()).to_numpy() / 1e6
-        batch = int(t.column("__batch")[0].as_py())
-        out.append((f.stat().st_mtime, batch, created))
+        out.append((f.stat().st_mtime, created))
     return out
 
 
@@ -393,43 +414,69 @@ def submit(spark, run_dir: Path):
     return next(q for q in spark.streams.active if q.name == QUERY_NAME)
 
 
+def start_pipeline(spark, plan: Plan, run_dir: Path):
+    """Land the warm-up file, submit the script and wait for its first
+    micro-batch; returns ``(generator, query)``, the generator not yet
+    started."""
+    landing = run_dir / "landing"
+    landing.mkdir(parents=True, exist_ok=True)
+    gen = Generator(plan, landing)
+    gen.land_warmup(time.time())
+    query = submit(spark, run_dir)
+    if not _wait_processed(query, int(plan.sizes[0]), time.time() + 60):
+        query.stop()
+        raise RuntimeError("the first micro-batch did not finish within 60 s")
+    return gen, query
+
+
+def feed(gen: Generator, query, deadline: float, at_steady=None) -> tuple[list[dict], bool]:
+    """Run the generator's schedule from now, call ``at_steady`` when the
+    steady phase starts, wait until the pipeline has processed every
+    event or ``deadline`` (epoch) passes, and stop the query. Returns its
+    progress records and whether it drained."""
+    plan = gen.plan
+    gen.start(time.time())
+    try:
+        if at_steady is not None:
+            time.sleep(max(0.0, gen.t0 + plan.steady_start - time.time()))
+            at_steady()
+        gen.join(max(1.0, plan.due[-1] + 30))
+        if gen.error is not None:
+            raise RuntimeError(f"generator failed: {gen.error}")
+        drained = _wait_processed(query, int(plan.sizes.sum()), max(time.time() + 5.0, deadline))
+    finally:
+        gen.stop()
+        query.stop()
+    return _progress(query), drained
+
+
 def run(spark, plan: Plan, run_dir: Path, tracer, setup_origin, deadline: float) -> dict:
     """One open-loop run; ``setup_origin`` is the epoch time set-up started
-    from (``None``: report no set-up time)."""
+    from (``None``: report no set-up time), ``deadline`` the
+    ``perf_counter`` time by which the pipeline must have drained."""
     import statistics
 
     from stats import backlog_always_present, failed_frac, pending_at, row_latencies, tail
 
     landing, sink, ckpt = (run_dir / k for k in ("landing", "sink", "ckpt"))
-    landing.mkdir(parents=True, exist_ok=True)
-    gen = Generator(plan, landing)
-    gen.land_warmup(time.time())
-    query = submit(spark, run_dir)
+    gen, query = start_pipeline(spark, plan, run_dir)
     if tracer is not None:
         tracer.watch(query)
-    if not _wait_processed(query, int(plan.sizes[0]), time.time() + 60):
-        raise RuntimeError("the first micro-batch did not finish within 60 s")
-    setup_s = time.time() - setup_origin if setup_origin is not None else 0.0
-    if tracer is not None:
-        tracer.reset()
+    setup_s = 0.0
 
-    t0 = time.time()
-    gen.start(t0)
+    def at_steady():
+        nonlocal setup_s
+        if setup_origin is not None:
+            setup_s = time.time() - setup_origin
+        if tracer is not None:
+            tracer.reset()
+
     total_events = int(plan.sizes.sum())
-    try:
-        gen.join(max(1.0, plan.due[-1] + 30))
-        if gen.error is not None:
-            raise RuntimeError(f"generator failed: {gen.error}")
-        drained = _wait_processed(
-            query, total_events, time.time() + max(5.0, deadline - time.perf_counter())
-        )
-    finally:
-        gen.stop()
-        query.stop()
+    progress, drained = feed(gen, query, time.time() + deadline - time.perf_counter(), at_steady)
+    t0 = gen.t0
     if tracer is not None:
         tracer.unwatch()
         tracer.freeze()
-    progress = _progress(query)
 
     # ---- batches: input files from the checkpoint, timing from progress
     landed = {os.path.basename(l.path): l for l in gen.landings}
@@ -441,18 +488,19 @@ def run(spark, plan: Plan, run_dir: Path, tracer, setup_origin, deadline: float)
                                 p["durationMs"].get("triggerExecution", 0) / 1e3)
     batches = sorted(b for b in batch_files if b in timing)
     phase_of = {b: {landed[f].phase for f in batch_files[b] if f in landed} for b in batches}
-    steady = {b for b in batches if phase_of[b] == {"steady"}}
-    if not steady:
-        # a machine so slow that one micro-batch spanned the whole steady
-        # phase: take the batches that read any steady-phase file
-        steady = {b for b in batches if "steady" in phase_of[b]}
+    steady = [b for b in batches if phase_of[b] == {"steady"}]
 
-    # ---- steady phase: newest-event latency per result row
-    files = [(mtime, created) for mtime, b, created in _changelog(sink) if b in steady]
-    lat = row_latencies(files)
-    trig = [timing[b][2] for b in sorted(steady)]
+    # ---- steady phase: newest-event latency of every result row whose
+    # newest event was created in the steady phase. A row whose newest
+    # event came from the warm phase or a burst is left out, so the
+    # figure keeps its meaning however the batches fell. The first
+    # burst's events are created exactly at the steady phase's end, so
+    # a guard keeps the stored timestamps' truncation from letting them in.
+    lat = row_latencies(_changelog(sink), t0 + plan.steady_start,
+                        t0 + plan.steady_end - CREATED_GUARD_S)
     if not lat:
-        raise RuntimeError("no micro-batch read the steady phase's files")
+        raise RuntimeError("no result row's newest event was created in the steady phase")
+    trig = [timing[b][2] for b in steady]
 
     # ---- overload phase: busy time and throughput under backlog. A
     # burst's cost is the summed duration of the micro-batches that read
@@ -480,13 +528,14 @@ def run(spark, plan: Plan, run_dir: Path, tracer, setup_origin, deadline: float)
 
     lat_p50 = statistics.median(lat)
     lat_tail, tail_label, n_lat = tail(lat)
-    trig_tail = tail(trig)
+    trig_tail = tail(trig) if trig else (None, "none", 0)
     report = {
         "setup_s": (setup_s, "s"),
         "total_s": (busy_s, "s", f"busy on {len(drains)} bursts, {over_events} events, in "
                     f"{n_burst_batches} micro-batches; each drained "
                     f"{' / '.join(f'{d:.3f}' for d in drains)} s after it landed"),
-        "query_p50_s": (statistics.median(trig), "s", "steady micro-batch"),
+        "query_p50_s": (statistics.median(trig) if trig else None, "s",
+                        f"{len(trig)} micro-batches read only steady-phase files"),
         "query_tail_s": (trig_tail[0], "s", f"{trig_tail[1]} of n={trig_tail[2]} micro-batches"),
         "failed_frac": (failed_frac(attempted, 0, 0, failed), "ratio"),
         "peak_rss_mb": (None, "MB"),
@@ -522,10 +571,11 @@ def run(spark, plan: Plan, run_dir: Path, tracer, setup_origin, deadline: float)
         ),
         "gen.late_s": max((l.landed - l.due for l in gen.landings if l.phase != "warmup"), default=0.0),
     }
+    steady_s = plan.steady_end - plan.steady_start
+    steady_events = sum(int(k) for k, ph in zip(plan.sizes, plan.phase) if ph == "steady")
     notes.append(
-        f"steady {plan.steady_end:.1f} s at "
-        f"{sum(int(k) for k, ph in zip(plan.sizes, plan.phase) if ph == 'steady') / plan.steady_end:.0f}"
-        f" events/s, "
+        f"steady {steady_s:.1f} s at {steady_events / steady_s:.0f} events/s "
+        f"after {plan.steady_start:.1f} s warm, "
         f"{len(steady)} steady micro-batches; {len(drains)} bursts, {over_events} events, "
         f"{'backlog always present' if backlogged else 'backlog NOT always present'}; "
         f"generator late by at most {layers['gen.late_s']:.3f} s"
@@ -584,7 +634,7 @@ def check_final(spark, run_dir: Path, landing: Path):
 
 
 def single_cpu_eps(spark, seed: int, run_dir: Path, tracer):
-    """The single-thread baseline: the overload burst alone through the
+    """The single-thread baseline: one overload burst alone through the
     same script on a ``local[1]`` session (``SPARK_GRAFT_CPUS=1``).
     Records ``open.max_eps_1cpu`` and returns that session, still running."""
     from flink_commons_spark import session
@@ -595,21 +645,11 @@ def single_cpu_eps(spark, seed: int, run_dir: Path, tracer):
     try:
         one = session.get_session()
         one.sparkContext.setLogLevel("ERROR")
-        plan = make_plan(seed, 0.5, STEADY_EPS, 1, BURST_EVENTS, warmup=WARMUP_EVENTS)
-        gen = Generator(plan, run_dir / "landing")
-        gen.landing_dir.mkdir(parents=True, exist_ok=True)
-        gen.land_warmup(time.time())
-        query = submit(one, run_dir)
-        if not _wait_processed(query, int(plan.sizes[0]), time.time() + 60):
-            raise RuntimeError("single-thread pipeline: first micro-batch did not finish")
-        gen.start(time.time())
-        gen.join(plan.due[-1] + 30)
-        total = int(plan.sizes.sum())
-        _wait_processed(query, total, time.time() + 60)
-        query.stop()
-        over = [l for l in gen.landings if l.phase == "overload"]
-        progress = _progress(query)
+        plan = make_plan(seed, 0.0, 0.5, STEADY_EPS, 1, BURST_EVENTS, warmup=WARMUP_EVENTS)
+        gen, query = start_pipeline(one, plan, run_dir)
+        progress, _ = feed(gen, query, time.time() + 60)
         batch_files = batch_inputs(progress, _source_log(run_dir / "ckpt"))
+        over = [l for l in gen.landings if l.phase == "overload"]
         busy, rows, _, _ = burst_busy(progress, batch_files, over)
         tracer.counters["open.max_eps_1cpu"] = rows / busy
     finally:

@@ -2,43 +2,32 @@
 
 Each closed-loop query's collected rows are compared exactly with its
 ``catalog.ORACLES`` twin run on DuckDB over the same parquet files. The
-canonical form is the one ``scripts/check_correctness.py`` uses in its
-default EXACT mode: every value through ``repr`` (``-0.0`` folded,
-NaN spelled out, no rounding), columns in sorted-name order, rows as a
-sorted multiset. Expected digests are computed from DuckDB output only
-and cached per checkout, keyed by the oracle SQL and the data version.
+canonical form is the correctness gate's own: rows go through
+``scripts/check_correctness.py``'s ``normalize`` in its default EXACT
+mode, and only a digest of its output is kept. Expected digests are
+computed from DuckDB output only and cached per checkout, keyed by the
+oracle SQL and the data.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-import math
 import os
 from pathlib import Path
 
-
-def _canon(v) -> str:
-    if hasattr(v, "item"):  # numpy scalar from pandas
-        v = v.item()
-    if isinstance(v, float):
-        if v == 0.0:  # fold -0.0
-            v = 0.0
-        if math.isnan(v):
-            return "NaN"
-    return repr(v)
+from scripts.check_correctness import TABLES, normalize
 
 
 def digest(rows, colnames) -> dict:
     """Order-insensitive digest of a result: row count, sorted column
-    names and a SHA-256 over the sorted canonical rows."""
-    cols = sorted(colnames)
-    lines = sorted("|".join(_canon(row[c]) for c in cols) for row in rows)
+    names and a SHA-256 over the gate's canonical rows."""
+    lines = normalize(rows, colnames, round6=False)
     h = hashlib.sha256()
     for line in lines:
         h.update(line.encode())
         h.update(b"\n")
-    return {"rows": len(lines), "cols": cols, "sha": h.hexdigest()}
+    return {"rows": len(lines), "cols": sorted(colnames), "sha": h.hexdigest()}
 
 
 def compare(got: dict, want: dict) -> str | None:
@@ -52,33 +41,44 @@ def compare(got: dict, want: dict) -> str | None:
     return None
 
 
-def duck_connect(data_dir: Path, tables, tmp_dir: Path, threads: int):
+def duck_connect(data_dir: Path, tmp_dir: Path, threads: int):
+    """A DuckDB connection with a view per gate table present in ``data_dir``."""
     import duckdb
 
     con = duckdb.connect()
     con.execute(f"SET threads={int(threads)}")
     con.execute("SET memory_limit='2GB'")
     con.execute(f"SET temp_directory='{tmp_dir}'")
-    for t in tables:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data_dir}/{t}.parquet'")
+    for t in TABLES:
+        if (data_dir / f"{t}.parquet").is_file():
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data_dir}/{t}.parquet'")
     return con
 
 
-def expected(names, oracles: dict, data_dir: Path, data_key: str, cache_dir: Path,
-             tables, threads: int) -> dict:
+def data_key(data_dir: Path) -> str:
+    """A hash over the data files' names and contents."""
+    h = hashlib.sha256()
+    for f in sorted(data_dir.glob("*.parquet")):
+        h.update(f.name.encode())
+        h.update(f.read_bytes())
+    return h.hexdigest()[:24]
+
+
+def expected(names, oracles: dict, data_dir: Path, cache_dir: Path, threads: int) -> dict:
     """DuckDB digest per query name, computed once per (oracle SQL, data)
     and cached as JSON under ``cache_dir``."""
     cache_dir.mkdir(parents=True, exist_ok=True)
+    data = data_key(data_dir)
     out, todo = {}, []
     for name in names:
-        key = hashlib.sha256(f"{data_key}\n{oracles[name]}".encode()).hexdigest()[:24]
+        key = hashlib.sha256(f"{data}\n{oracles[name]}".encode()).hexdigest()[:24]
         path = cache_dir / f"{name}-{key}.json"
         if path.exists():
             out[name] = json.loads(path.read_text())
         else:
             todo.append((name, path))
     if todo:
-        con = duck_connect(data_dir, tables, cache_dir, threads)
+        con = duck_connect(data_dir, cache_dir, threads)
         try:
             for name, path in todo:
                 # fetched through pandas, like the correctness gate, so

@@ -2,7 +2,7 @@
 
 Usage (from the root of a checkout)::
 
-    python3 perfbench/run.py --workload closed_loop --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload closed_loop --seed 1 --seconds 30 --trace 0
     python3 perfbench/run.py --smoke
 
 Two workloads run against the program's public entry points
@@ -22,9 +22,10 @@ per-layer metrics of a traced run (``tracing.py``), whose spans and
 counters are also written to ``perfbench/.work/trace-<workload>.json``.
 ``--smoke`` runs every workload briefly at scale factor 0.001.
 
-Everything the run writes stays under ``perfbench/.work``: generated
-tables and cached oracle digests persist there between runs, and each
-run's scratch directory is removed when it ends.
+The closed loop reads the reference test tables copied under
+``perfbench/data``. Everything the run writes stays under
+``perfbench/.work``: cached oracle digests persist there between runs,
+and each run's scratch directory is removed when it ends.
 """
 
 from __future__ import annotations
@@ -47,13 +48,15 @@ from typing import NoReturn
 BENCH = Path(__file__).resolve().parent
 ROOT = BENCH.parent
 WORK = BENCH / ".work"
+#: the closed loop's tables: copies of the repository's reference test
+#: data (``TESTDATA.md``), see ``data/README.md``
+DATA = BENCH / "data"
 # the checkout's package first, so the measured tree is the one imported
 sys.path[:0] = [str(ROOT), str(BENCH)]
 
 WORKLOADS = ("closed_loop", "stream_open_loop")
 SF = 0.1
 SMOKE_SF = 0.001
-DATA_SEED = 42
 DRIVER_MEMORY = "4g"
 #: a run must exit well inside the 180 s a caller allows it
 RUN_DEADLINE_S = 150.0
@@ -275,7 +278,7 @@ def start_session(tracer):
 def warm_up(spark, data_dir: Path) -> None:
     """One scan-and-aggregate before anything is timed, so the parquet
     reader, code generation and the shuffle are loaded."""
-    spark.read.parquet(str(data_dir / "nation.parquet")).groupBy("n_regionkey").count().collect()
+    spark.read.parquet(str(data_dir / "events.parquet")).groupBy("event_type").count().collect()
 
 
 # ------------------------------------------------------------- reports
@@ -283,25 +286,25 @@ def warm_up(spark, data_dir: Path) -> None:
 
 def summarize_closed(res, first, setup_s: float) -> dict:
     """End-to-end metrics for the result line and the full report. The
-    timing comes from the timed passes ``res``; the first pass ``first``
-    counts in the operations attempted and failed."""
-    from stats import failed_frac, tail
+    timing comes from the timed passes ``res``: each query's time is its
+    median over the passes, so the figures do not depend on which query
+    a pass happens to put in the middle. The warm passes ``first`` count
+    in the operations attempted and failed."""
+    from stats import failed_frac, query_medians, tail
 
     ops = first.ops + res.ops
-    times = [op.seconds for op in res.ops if op.outcome == "ok"]
     errors = sum(op.outcome == "error" for op in ops)
     timeouts = sum(op.outcome == "timeout" for op in ops)
     wrong = sum(op.outcome == "wrong" for op in ops)
-    if not times:
-        times = [op.seconds for op in res.ops] or [float("nan")]
-    p50 = statistics.median(times)
-    t_val, t_label, n = tail(times)
-    total = statistics.median(res.passes)
+    med = query_medians([(op.name, op.seconds) for op in res.ops])
+    total = sum(med.values())
+    p50 = statistics.median(med.values())
+    t_val, t_label, n = tail(list(med.values()))
     report = {
         "setup_s": (setup_s, "s"),
-        "total_s": (total, "s"),
-        "query_p50_s": (p50, "s"),
-        "query_tail_s": (t_val, "s", f"{t_label} of n={n}"),
+        "total_s": (total, "s", f"sum of {n} query medians over {len(res.passes)} passes"),
+        "query_p50_s": (p50, "s", f"median of {n} query medians"),
+        "query_tail_s": (t_val, "s", f"{t_label} of n={n} query medians"),
         "failed_frac": (failed_frac(len(ops), errors, timeouts, wrong), "ratio"),
         "peak_rss_mb": (None, "MB"),
         "latency_p50_s": (p50, "s", "a closed-loop caller waits one query time"),
@@ -345,26 +348,20 @@ def print_report(workload: str, report: dict, info: dict) -> None:
 
 
 def build_inputs(workload: str, sf: float, seed: int, seconds: float, smoke: bool) -> dict:
-    """Generated tables, cached oracle digests and the open-loop schedule:
-    the benchmark's own preparation, whose duration (``build_s``) is not
-    counted as set-up. Importing the program is, so it happens first."""
+    """Cached oracle digests and the open-loop schedule: the benchmark's
+    own preparation, whose duration (``build_s``) is not counted as
+    set-up. Importing the program is, so it happens first."""
     import closedloop
-    import datagen
     import openloop
     import oracle
     from flink_commons_spark import catalog
 
     t0 = time.perf_counter()
-    data_dir = datagen.ensure(
-        WORK / "data" / f"sf{sf:g}-s{DATA_SEED}-v{datagen.VERSION}", sf, DATA_SEED
-    )
+    data_dir = DATA / f"sf{sf:g}"
     names = closedloop.QUERIES if workload == "closed_loop" else []
     expected, plan = {}, None
     if names:
-        expected = oracle.expected(
-            names, catalog.ORACLES, data_dir, data_dir.name, WORK / "oracle",
-            datagen.TABLES, nproc(),
-        )
+        expected = oracle.expected(names, catalog.ORACLES, data_dir, WORK / "oracle", nproc())
     if workload == "stream_open_loop":
         plan = openloop.plan_for(seed, seconds, smoke)
     return {"data_dir": data_dir, "names": names, "expected": expected, "plan": plan,
@@ -383,12 +380,11 @@ def run_workload(workload: str, inputs: dict, seed: int, seconds: float, spark, 
     if workload == "stream_open_loop":
         out = openloop.run(spark, inputs["plan"], run_dir, tracer, setup_origin, deadline)
     else:
-        # the first pass pays each query's first-use costs (plan code
-        # generation, UDF shipping, worker imports) and is set-up; its
-        # results are checked like every other
+        # the warm passes are set-up; their results are checked like
+        # every other
         names, data, expected = inputs["names"], str(inputs["data_dir"]), inputs["expected"]
-        first = closedloop.run(spark, names, seed, 1, data, expected, deadline=deadline,
-                               first_pass=-1)
+        first = closedloop.run(spark, names, seed, closedloop.WARM_PASSES, data, expected,
+                               deadline=deadline, first_pass=-closedloop.WARM_PASSES)
         setup_s = time.time() - setup_origin if setup_origin is not None else 0.0
         if tracer is not None:
             tracer.reset()
@@ -501,7 +497,7 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", choices=WORKLOADS)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=12.0)
+    ap.add_argument("--seconds", type=float, default=30.0)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--smoke", action="store_true", help="every workload briefly at sf0.001")
     args = ap.parse_args(argv)

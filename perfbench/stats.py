@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import math
+import statistics
+
 #: percentiles considered for a tail figure, lowest first
 TAIL_LADDER = (50.0, 75.0, 90.0, 95.0, 99.0, 99.9)
 
@@ -34,6 +37,14 @@ def tail(values) -> tuple[float, str, int]:
     return percentile(values, best), label, n
 
 
+def query_medians(timings) -> dict[str, float]:
+    """Each query's median time, from ``(name, seconds)`` per run of it."""
+    by_name: dict[str, list[float]] = {}
+    for name, secs in timings:
+        by_name.setdefault(name, []).append(secs)
+    return {name: statistics.median(xs) for name, xs in by_name.items()}
+
+
 def failed_frac(attempted: int, errors: int, timeouts: int, wrong: int) -> float:
     """Operations that errored, timed out or returned a wrong result,
     over operations attempted. An operation counts once even when it is
@@ -46,15 +57,16 @@ def failed_frac(attempted: int, errors: int, timeouts: int, wrong: int) -> float
     return failed / attempted
 
 
-def row_latencies(files) -> list[float]:
-    """Newest-event latency of every result row.
+def row_latencies(files, lo: float = -math.inf, hi: float = math.inf) -> list[float]:
+    """Newest-event latency of every result row whose newest event was
+    created in ``[lo, hi)``.
 
     ``files`` holds ``(mtime, last_created_values)`` per changelog file the
     sink wrote: a row's latency is the time its file landed minus the
     creation time of the newest event that contributed to it."""
     out = []
     for mtime, created in files:
-        out.extend(mtime - c for c in created)
+        out.extend(mtime - c for c in created if lo <= c < hi)
     return out
 
 

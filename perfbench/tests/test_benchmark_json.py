@@ -1,5 +1,6 @@
 """``BENCHMARK.json`` lists exactly the metrics the benchmark prints."""
 
+import hashlib
 import json
 import sys
 from pathlib import Path
@@ -24,3 +25,10 @@ def test_per_layer_metrics_match_the_traced_run():
 
 def test_workloads_match_the_runner():
     assert tuple(w["name"] for w in SPEC["workloads"]) == run.WORKLOADS
+
+
+def test_data_files_match_their_recorded_hashes():
+    data = BENCH / "data"
+    for line in (data / "SHA256SUMS").read_text().splitlines():
+        want, name = line.split()
+        assert hashlib.sha256((data / name).read_bytes()).hexdigest() == want, name

@@ -60,6 +60,20 @@ def test_row_latencies_are_file_mtime_minus_newest_event():
     assert stats.row_latencies([]) == []
 
 
+def test_row_latencies_keep_rows_created_in_the_window():
+    # the second file's first row took in an event created at 10.0, the
+    # window's end, so its newest event is not a steady-phase one
+    files = [(5.0, [4.0, 3.5]), (11.0, [10.0, 9.5])]
+    assert stats.row_latencies(files, 0.0, 10.0) == [1.0, 1.5, 1.5]
+    assert stats.row_latencies(files, 4.0, 10.0) == [1.0, 1.5]
+
+
+def test_query_medians_take_each_query_alone():
+    timings = [("a", 1.0), ("b", 5.0), ("a", 3.0), ("b", 4.0), ("a", 2.0), ("b", 9.0)]
+    assert stats.query_medians(timings) == {"a": 2.0, "b": 5.0}
+    assert stats.query_medians([("a", 1.0), ("a", 2.0)]) == {"a": 1.5}
+
+
 def test_pending_counts_landed_unread_files_only():
     landings = [(1.0, "a", 10), (2.0, "b", 20), (3.0, "c", 30)]
     assert stats.pending_at(2.5, landings, set()) == 30
